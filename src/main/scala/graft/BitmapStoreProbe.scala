@@ -2,6 +2,8 @@ package graft
 
 import org.apache.spark.sql.functions._
 
+import graft.sources.TableSwap
+
 /** Diagnostic main: measures [[graft.sources.BitmapStore]]'s serving
   * claim across the events decade — "exactly which users has each
   * event type reached, ever, WITHOUT an event-log rescan" — plus the
@@ -36,7 +38,7 @@ object BitmapStoreProbe {
         .localCheckpoint()
       val nEvents = events.count()
       val table = s"bm_probe_$i"
-      for (s <- Seq("", "_dels")) Probes.dropManaged(spark, table + s)
+      for (s <- Seq("", "_dels")) TableSwap.dropManaged(spark, table + s)
       val nBatches = 20
       val (tIngest, _) = Probes.timed {
         (0 until nBatches).foreach { b =>

@@ -24,7 +24,7 @@ object DocStoreProbe {
       sys.env.getOrElse("SPARK_GRAFT_CPUS", "32").toInt)
     val table = "docstore_probe"
     for (t <- Seq(table, s"${table}_bands"))
-      Probes.dropManaged(spark, t)
+      TableSwap.dropManaged(spark, t)
     val docs = Tables.load(spark, sfDir, "documents")
       .select(col("doc_id"), col("text"), col("source"))
     DocStore.append(docs, table)

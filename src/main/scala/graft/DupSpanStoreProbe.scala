@@ -2,6 +2,8 @@ package graft
 
 import org.apache.spark.sql.functions._
 
+import graft.sources.TableSwap
+
 /** Diagnostic main: measures [[graft.sources.DocStore.dupSpanCandidates]]'s
   * batch-shaped claim across a corpus decade — the r13 incremental
   * face of exact-substring dedup (d14). d3 has the band-index probe
@@ -39,7 +41,7 @@ object DupSpanStoreProbe {
       val nDocs = docs.count()
       val table = s"dupspan_probe_$i"
       for (s <- Seq("", "_bands", "_anchors", "_anchorsmeta", "_dels"))
-        Probes.dropManaged(spark, table + s)
+        TableSwap.dropManaged(spark, table + s)
       val (tBuild, _) = Probes.timed {
         DocStore.append(docs, table, buckets = 64)
         DocStore.initAnchors(spark, table, k = 8, buckets = 64)

@@ -70,7 +70,7 @@ object GraftSession {
       // recompile churn on driver AND executors of a real cluster).
       // Env-overridable for measurement (SPARK_GRAFT_CODEGEN_CACHE).
       .config("spark.sql.codegen.cache.maxEntries",
-        sys.env.getOrElse("SPARK_GRAFT_CODEGEN_CACHE", "8000"))
+        codegenCacheEntries(sys.env.get("SPARK_GRAFT_CODEGEN_CACHE")).toString)
       .config("spark.sql.extensions", "graft.GraftExtensions")
       .config("spark.sql.warehouse.dir",
         sys.env.getOrElse("GRAFT_WAREHOUSE", "/tmp/graft_warehouse"))
@@ -79,4 +79,14 @@ object GraftSession {
     s.sparkContext.setLogLevel("WARN")
     s
   }
+
+  /** The codegen cache size from `SPARK_GRAFT_CODEGEN_CACHE` (unset =
+    * 8000). Parsed here because the Spark conf is static: a bad value
+    * would otherwise reach the session untouched and fail (or be
+    * ignored) far from the variable that caused it.
+    */
+  private[graft] def codegenCacheEntries(raw: Option[String]): Int =
+    raw.fold(8000)(v => v.toIntOption.filter(_ > 0).getOrElse(
+      throw new IllegalArgumentException(
+        s"SPARK_GRAFT_CODEGEN_CACHE must be a positive integer, got '$v'")))
 }

@@ -2,7 +2,7 @@ package graft
 
 import org.apache.spark.sql.functions._
 
-import graft.sources.GraphStore
+import graft.sources.{GraphStore, TableSwap}
 
 /** Incremental-census probe (r15): is a GraphStore refresh tick
   * BATCH-bounded once the per-edge support snapshot exists?
@@ -32,12 +32,11 @@ object GraphDeltaProbe {
     require(args.nonEmpty, "usage: GraphDeltaProbe <sfDir> [<sfDir>…]")
     val spark = GraftSession.local(
       sys.env.getOrElse("SPARK_GRAFT_CPUS", "32").toInt)
-    import graft.operators.Components.release
     args.foreach { dir =>
       val t = "gdelta_probe"
       Seq(t, s"${t}_dels", s"${t}_ranks", s"${t}_communities",
         s"${t}_cohesion", s"${t}_kcore", s"${t}_support")
-        .foreach(n => Probes.dropManaged(spark, n))
+        .foreach(n => TableSwap.dropManaged(spark, n))
       val li = Tables.load(spark, dir, "lineitem").select(
         col("l_orderkey"),
         concat(lit("order-"), col("l_orderkey")).as("o"),
@@ -60,16 +59,16 @@ object GraphDeltaProbe {
       val newE = rows.filter(col("ver") > 1L).select(col("src"), col("dst"))
       val storedSup = spark.table(s"${t}_support")
       val (censusDelta, nDelta) = Probes.timed {
-        val (df, blocks) = graft.operators.Triangles
+        val pin = graft.operators.Triangles
           .perEdgeDeltaDiff(oldE, storedSup, newE)
-        val n = df.queryExecution.toRdd.count()
-        release(spark.sparkContext, blocks); n
+        val n = pin.df.queryExecution.toRdd.count()
+        pin.release(); n
       }
       val (censusFull, nFull) = Probes.timed {
-        val (df, blocks) = graft.operators.Triangles
+        val pin = graft.operators.Triangles
           .perEdgeDiff(GraphStore.edges(spark, t))
-        val n = df.queryExecution.toRdd.count()
-        release(spark.sparkContext, blocks); n
+        val n = pin.df.queryExecution.toRdd.count()
+        pin.release(); n
       }
       require(nDelta == nFull,
         s"delta census row count $nDelta != full $nFull")
@@ -79,10 +78,10 @@ object GraphDeltaProbe {
       val storedCore = spark.table(s"${t}_kcore")
         .select(col("node"), col("core_degree").as("d"))
       val (kcoreDelta, nCoreDelta) = Probes.timed {
-        val (df, blocks) = graft.operators.KCore
+        val pin = graft.operators.KCore
           .membershipDeltaDiff(oldE, storedCore, newE, 3L)
-        val n = df.queryExecution.toRdd.count()
-        release(spark.sparkContext, blocks); n
+        val n = pin.df.queryExecution.toRdd.count()
+        pin.release(); n
       }
       val (kcoreFull, nCoreFull) = Probes.timed {
         graft.operators.KCore.membership(GraphStore.edges(spark, t), 3L, 64)

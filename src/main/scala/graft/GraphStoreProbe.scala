@@ -2,7 +2,7 @@ package graft
 
 import org.apache.spark.sql.functions._
 
-import graft.sources.GraphStore
+import graft.sources.{GraphStore, TableSwap}
 
 /** GraphStore serve-vs-recompute probe (the TopKStore/QuantileStore
   * separation argument applied to whole-graph analytics): builds the
@@ -22,7 +22,7 @@ object GraphStoreProbe {
     args.foreach { dir =>
       val t = "gstore_probe"
       Seq(t, s"${t}_dels", s"${t}_ranks", s"${t}_communities",
-        s"${t}_cohesion").foreach(n => Probes.dropManaged(spark, n))
+        s"${t}_cohesion").foreach(n => TableSwap.dropManaged(spark, n))
       // the f26/f28 CO-OCCURRENCE graph (the statement graph is
       // star-shaped and triangle-free — its community table would be
       // structurally empty)

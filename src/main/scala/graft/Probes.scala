@@ -1,11 +1,8 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
-/** The shared measurement + teardown scaffold of every probe main and
-  * store spec — one definition of the timing protocol and of managed-
-  * table cleanup, so a change to either (warmup discipline, the stage
-  * naming TableSwap generates) cannot silently diverge across copies.
+/** The shared measurement scaffold of every probe main — one
+  * definition of the timing protocol, so a change to the warmup
+  * discipline cannot silently diverge across copies.
   */
 object Probes {
 
@@ -22,29 +19,5 @@ object Probes {
     timed(f)
     val runs = (1 to 3).map(_ => timed(f))
     (runs.map(_._1).sorted.apply(1), runs.head._2)
-  }
-
-  /** Drop a managed table from the catalog AND the filesystem,
-    * including its compact/stage siblings: the in-memory catalog
-    * forgets tables between JVMs but their warehouse dirs persist, and
-    * a stale dir fails the next saveAsTable with
-    * LOCATION_ALREADY_EXISTS.
-    */
-  def dropManaged(spark: SparkSession, table: String): Unit = {
-    graft.sources.TableSwap.dropAllStages(spark, table)
-    spark.sql(s"DROP TABLE IF EXISTS $table")
-    val wh = new java.io.File(
-      spark.conf.get("spark.sql.warehouse.dir").stripPrefix("file:"))
-    Option(wh.listFiles()).getOrElse(Array.empty)
-      .filter(d => d.getName == table ||
-        d.getName == table + "_compacted" ||
-        d.getName.startsWith(table + "_stage_"))
-      .foreach(rm)
-  }
-
-  private def rm(f: java.io.File): Unit = {
-    if (f.isDirectory)
-      Option(f.listFiles()).getOrElse(Array.empty).foreach(rm)
-    f.delete(); ()
   }
 }

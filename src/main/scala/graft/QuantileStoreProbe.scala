@@ -2,6 +2,8 @@ package graft
 
 import org.apache.spark.sql.functions._
 
+import graft.sources.TableSwap
+
 /** Diagnostic main: measures [[graft.sources.QuantileStore]]'s serving
   * claim across the corpus decade — "the live p50/p95/p99 document
   * length per source, ever, WITHOUT a corpus rescan". Read cost is
@@ -38,7 +40,7 @@ object QuantileStoreProbe {
         .localCheckpoint()
       val nDocs = docs.count()
       val table = s"ql_probe_$i"
-      for (s <- Seq("", "_dels")) Probes.dropManaged(spark, table + s)
+      for (s <- Seq("", "_dels")) TableSwap.dropManaged(spark, table + s)
       val nBatches = 20
       val (tIngest, _) = Probes.timed {
         (0 until nBatches).foreach { b =>

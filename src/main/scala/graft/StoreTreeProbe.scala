@@ -2,7 +2,7 @@ package graft
 
 import org.apache.spark.sql.functions._
 
-import graft.sources.VecStore
+import graft.sources.{TableSwap, VecStore}
 
 /** Flat vs TREE coarse assignment at the STORE face — the literal-
   * expression sibling of [[TreeIvfProbe]] (which measures the
@@ -38,7 +38,7 @@ object StoreTreeProbe {
       for (t <- Seq("stp_flat", "stp_tree"))
         for (s <- Seq(t, s"${t}_cents", s"${t}_tops", s"${t}_leafmap",
             s"${t}_dels"))
-          Probes.dropManaged(spark, s)
+          TableSwap.dropManaged(spark, s)
       val (flatInit, _) = timed {
         VecStore.init(spark, "stp_flat", emb, col("label"), buckets = 16)
         VecStore.read(spark, "stp_flat").count()

@@ -2,6 +2,8 @@ package graft
 
 import org.apache.spark.sql.functions._
 
+import graft.sources.TableSwap
+
 /** Diagnostic main: measures [[graft.sources.TopKStore]]'s serving
   * claim across the corpus decade — "the head terms per source, ever,
   * WITHOUT a corpus rescan". The store's read cost is SUMMARY-shaped
@@ -45,7 +47,7 @@ object TopKStoreProbe {
       val cap = math.max(4096L, java.lang.Long.highestOneBit(vocabMax) * 2L)
         .toInt
       val table = s"topk_probe_$i"
-      for (s <- Seq("", "_dels")) Probes.dropManaged(spark, table + s)
+      for (s <- Seq("", "_dels")) TableSwap.dropManaged(spark, table + s)
       val nBatches = 20
       val (tIngest, _) = Probes.timed {
         (0 until nBatches).foreach { b =>

@@ -2,7 +2,7 @@ package graft
 
 import org.apache.spark.sql.functions._
 
-import graft.sources.VecStore
+import graft.sources.{TableSwap, VecStore}
 
 /** Scratch diagnosis: where does the tree store's served-search time
   * go at L = 1000? Times the probe-side construction vs the full
@@ -21,7 +21,7 @@ object TreeSearchDebugProbe {
     for (t <- Seq("stp_flat", "stp_tree"))
       for (s <- Seq(t, s"${t}_cents", s"${t}_tops", s"${t}_leafmap",
           s"${t}_dels"))
-        Probes.dropManaged(spark, s)
+        TableSwap.dropManaged(spark, s)
     VecStore.init(spark, "stp_flat", emb, col("label"), buckets = 16)
     VecStore.init(spark, "stp_tree", emb, col("label"), buckets = 16,
       treeTopCount = 32)

@@ -2,7 +2,7 @@ package graft
 
 import org.apache.spark.sql.functions._
 
-import graft.sources.VecStore
+import graft.sources.{TableSwap, VecStore}
 
 /** Measures the vector-store OUT-OF-BAND compaction claim (r12,
   * `VecStore.compactStage`/`compactFinish`): the writer's critical
@@ -37,7 +37,7 @@ object VecCompactProbe {
       for (t <- Seq(table, s"${table}_cents", s"${table}_tops",
           s"${table}_leafmap", s"${table}_pq", s"${table}_codes",
           s"${table}_dels"))
-        Probes.dropManaged(spark, t)
+        TableSwap.dropManaged(spark, t)
     val emb = Tables.load(spark, sfDir, "embeddings")
       .select(col("vec_id"), col("embedding"), col("label"))
       .localCheckpoint()

@@ -21,7 +21,7 @@ object VecServeProbe {
     val table = "vecserve_probe"
     for (t <- Seq(table, s"${table}_cents", s"${table}_pq",
         s"${table}_codes"))
-      Probes.dropManaged(spark, t)
+      TableSwap.dropManaged(spark, t)
     val emb = Tables.load(spark, sfDir, "embeddings")
     VecStore.init(spark, table, emb, col("label"), buckets = 16)
     VecStore.trainPqCodebook(spark, table, buckets = 16)

@@ -25,7 +25,7 @@ object VecStoreProbe {
       sys.env.getOrElse("SPARK_GRAFT_CPUS", "32").toInt)
     val table = "vecstore_probe"
     for (t <- Seq(table, s"${table}_cents"))
-      Probes.dropManaged(spark, t)
+      TableSwap.dropManaged(spark, t)
     val emb = Tables.load(spark, sfDir, "embeddings")
     VecStore.init(spark, table, emb, col("label"), buckets = 16)
     // the ingest batch: copies of existing vectors under fresh ids

@@ -2,7 +2,7 @@ package graft
 
 import org.apache.spark.sql.functions._
 
-import graft.sources.{BloomSkip, StatementStore, ZOrderLayout}
+import graft.sources.{BloomSkip, StatementStore, TableSwap, ZOrderLayout}
 
 /** The z-ordered STATEMENT STORE at scale (the spec gates 120k rows;
   * this measures the same three skip claims a decade up): 1.2M
@@ -20,7 +20,7 @@ object ZOrderStoreProbe {
     val rows = args.headOption.map(_.toInt).getOrElse(1200000)
     val spark = GraftSession.local(
       sys.env.getOrElse("SPARK_GRAFT_CPUS", "32").toInt)
-    Seq("zprobe", "zprobe_plain").foreach(t => Probes.dropManaged(spark, t))
+    Seq("zprobe", "zprobe_plain").foreach(t => TableSwap.dropManaged(spark, t))
     val base = 1700000000L
     val batch = spark.range(rows.toLong)
       .select(

@@ -27,10 +27,10 @@ import org.apache.spark.storage.StorageLevel
   * exactly, and the same 100 TB argument: nothing broadcast, both
   * sides scale with the data.
   *
-  * The round chain is LAZY (r15 optimization, the PageRank form). The
-  * textbook round references lab_{i-1} twice (itself ∪ neighbor
-  * labels), which would blow a lazy plan up 2^R — the reason the
-  * DuckDB twin needs MATERIALIZED CTEs. Appending SELF-LOOPS to the
+  * The round chain is LAZY (r15 optimization, the PageRank form — a
+  * [[Rounds.chain]]). The textbook round references lab_{i-1} twice
+  * (itself ∪ neighbor labels), which would blow a lazy plan up 2^R
+  * — the reason the DuckDB twin needs MATERIALIZED CTEs. Appending SELF-LOOPS to the
   * checkpointed edge set once makes the closed-neighborhood min a
   * plain neighbor min — lab_i = min over und'(u,v) of lab_{i-1}(v)
   * with (u,u) ∈ und' — so each round references lab_{i-1} exactly
@@ -59,20 +59,16 @@ object LabelProp {
       edges: DataFrame, rounds: Int,
       src: String = "src", dst: String = "dst"): DataFrame = {
     require(rounds >= 1, s"labelprop: rounds must be >= 1, got $rounds")
-    val sc = edges.sparkSession.sparkContext
-    import Components.{checkpointDiff, release}
     // symmetrized edges PLUS a self-loop per node: the closed
     // neighborhood as plain edges, so a round reads `lab` once (the
     // lazy-chain precondition — see the class doc)
-    val (und, uBlocks) = checkpointDiff(sc) {
-      val fwd = edges.select(col(src).as("u"), col(dst).as("v"))
-      val sym = fwd.unionAll(fwd.select(col("v").as("u"), col("u").as("v")))
-      sym
-        .unionAll(sym.select(col("u")).distinct()
-          .select(col("u"), col("u").as("v")))
-        .distinct()
-        .localCheckpoint(true, StorageLevel.MEMORY_AND_DISK_SER)
-    }
+    val fwd = edges.select(col(src).as("u"), col(dst).as("v"))
+    val sym = fwd.unionAll(fwd.select(col("v").as("u"), col("u").as("v")))
+    val undPin = Rounds.pin(sym
+      .unionAll(sym.select(col("u")).distinct()
+        .select(col("u"), col("u").as("v")))
+      .distinct(), level = StorageLevel.MEMORY_AND_DISK_SER)
+    val und = undPin.df
     // ONE reusable exchange of the edge side: the checkpoint erases
     // partitioning metadata, so each round's join would re-shuffle und
     // from the cached blocks (measured: one und shuffle write PER
@@ -83,7 +79,7 @@ object LabelProp {
     // (the session scale knob) keeps AQE from re-coalescing it and
     // keeps the output partitioning join-compatible.
     val undByV = und.repartition(Components.shufflePartitions(und), col("v"))
-    var lab = und.select(col("u").as("node")).distinct()
+    val lab0 = und.select(col("u").as("node")).distinct()
       .select(col("node"), col("node").as("label"))
     // Lazy in SEGMENTS of 5 rounds: a segment pipelines its joins in
     // one job (no per-round driver sync/checkpoint), while the segment
@@ -91,23 +87,11 @@ object LabelProp {
     // R-deep mega-plan measured faster isolated but slower in-suite
     // (planning + fresh-codegen cost of one 20-stage DAG under the
     // bench's JIT load outweighed the saved round syncs).
-    var segBlocks = Set.empty[Int]
-    var i = 0
-    while (i < rounds) {
-      val seg = math.min(5, rounds - i)
-      var j = 0
-      while (j < seg) {
-        lab = undByV.join(lab.withColumnRenamed("node", "v"), Seq("v"))
-          .groupBy(col("u").as("node")).agg(min(col("label")).as("label"))
-        j += 1
-      }
-      val (next, nBlocks) = checkpointDiff(sc) { lab.localCheckpoint() }
-      release(sc, segBlocks)
-      lab = next
-      segBlocks = nBlocks
-      i += seg
+    val lab = Rounds.chain(lab0, rounds, segment = 5) { prev =>
+      undByV.join(prev.withColumnRenamed("node", "v"), Seq("v"))
+        .groupBy(col("u").as("node")).agg(min(col("label")).as("label"))
     }
-    release(sc, uBlocks)
-    lab
+    undPin.release()
+    lab.df
   }
 }

@@ -3,7 +3,7 @@ package graft.sources
 import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
 import org.apache.spark.sql.functions._
 
-import graft.operators.{LabelProp, PageRank, Triangles}
+import graft.operators.{KCore, LabelProp, PageRank, Rounds, Triangles}
 
 /** The stored entity graph WITH its served analytics — the summary-
   * store fence ([[SketchStore]]/[[TopKStore]] discipline) applied to
@@ -295,13 +295,11 @@ object GraphStore {
       }
     }
     // the live edge set feeds three consumers (ranks, census, FINAL
-    // rewrite) — materialized once, released when the refresh is done
-    // (the Components discipline; refresh is off the serving path, so
-    // nothing outlives this call)
-    import graft.operators.Components.{checkpointDiff, release}
-    val (e, eBlocks) = checkpointDiff(spark.sparkContext) {
-      edges(spark, table).localCheckpoint()
-    }
+    // rewrite) — pinned once ([[Rounds]]), released when the refresh is
+    // done (refresh is off the serving path, so nothing outlives this
+    // call)
+    val ePin = Rounds.pin(edges(spark, table))
+    val e = ePin.df
     val b = TableSwap.bucketsOf(spark, table).getOrElse(buckets)
 
     // each summary frame is fully consumed by its stageSwap write, so
@@ -309,17 +307,16 @@ object GraphStore {
     // lands — a long-running telemetry stream's refresh ticks pin
     // nothing between cadences (r14 advisor finding: ranks/labels/
     // census finals leaked one node-grain generation per tick)
-    val (ranks, rankBlocks) = checkpointDiff(spark.sparkContext) {
-      PageRank.ranks(e, iters).withColumn("as_of", lit(asOf))
-    }
-    stageSwap(spark, s"${table}_ranks", b, "id")(ranks)
+    val ranks = Rounds.held(PageRank.ranks(e, iters))
+    stageSwap(spark, s"${table}_ranks", b, "id")(
+      ranks.df.withColumn("as_of", lit(asOf)))
     // the stored-parameters declaration: a later NO-OP/REPLAY fast
     // path must never restamp summaries computed under different
     // iteration parameters (re-set after every swap — the fallback
     // DROP+RENAME swap path loses properties, and a lost property
     // only disables the fast paths, never correctness)
     setProp(spark, s"${table}_ranks", "graft.graph.params", params)
-    release(spark.sparkContext, rankBlocks)
+    ranks.release()
 
     // ONE census pays for two summaries: the per-edge support feeds
     // the truss filter below, and the per-NODE triangle count (f26's
@@ -340,7 +337,7 @@ object GraphStore {
           .agg(max(col("as_of"))).collect()(0)
         if (r.isNullAt(0)) None else Some(r.getLong(0))
       }
-    val (support, supportBlocks) = supportAsOf match {
+    val supportPin = supportAsOf match {
       case Some(snapVer) if deltaCensus && delsSnap.isEmpty &&
           snapVer >= sv =>
         // append-only tick: batch-bounded delta against the snapshot
@@ -353,6 +350,7 @@ object GraphStore {
           oldE, spark.table(s"${table}_support"), newE)
       case _ => Triangles.perEdgeDiff(e)
     }
+    val support = supportPin.df
     stageSwap(spark, s"${table}_support", b, "a")(
       support.withColumn("as_of", lit(asOf)))
     val cohesion = support
@@ -366,14 +364,12 @@ object GraphStore {
     val kept = support
       .filter(col("support") >= minSupport)
       .select(col("a").as("src"), col("b").as("dst"))
-    val (comm, commBlocks) = checkpointDiff(spark.sparkContext) {
-      LabelProp.minLabelRounds(kept, lpRounds)
-        .select(col("node"), col("label").as("community"))
-        .withColumn("as_of", lit(asOf))
-    }
-    stageSwap(spark, s"${table}_communities", b, "node")(comm)
-    release(spark.sparkContext, commBlocks)
-    release(spark.sparkContext, supportBlocks)
+    val comm = Rounds.held(LabelProp.minLabelRounds(kept, lpRounds))
+    stageSwap(spark, s"${table}_communities", b, "node")(
+      comm.df.select(col("node"), col("label").as("community"))
+        .withColumn("as_of", lit(asOf)))
+    comm.release()
+    supportPin.release()
 
     // f29's k-core at the same cadence (r15): the peel runs on the
     // full live edge set (NOT the truss-filtered one — k-core and
@@ -399,35 +395,30 @@ object GraphStore {
         if (r.isNullAt(0)) None
         else storedK.map(sk => (r.getLong(0), sk))
       }
-    val (core, coreBlocks) = kcoreSnap match {
+    val core = kcoreSnap match {
       case Some((snapVer, storedK))
           if deltaCensus && delsSnap.isEmpty && storedK == kcoreK &&
             snapVer >= sv =>
         val rows = spark.table(table)
-        val (c, blocks) = graft.operators.KCore.membershipDeltaDiff(
+        KCore.membershipDeltaDiff(
           rows.filter(col("ver") <= snapVer).select(col("src"), col("dst")),
           spark.table(s"${table}_kcore")
             .select(col("node"), col("core_degree").as("d")),
           rows.filter(col("ver") > snapVer).select(col("src"), col("dst")),
           kcoreK)
-        (c.select(col("node"), col("d").as("core_degree"))
-          .withColumn("as_of", lit(asOf)), blocks)
-      case _ =>
-        checkpointDiff(spark.sparkContext) {
-          graft.operators.KCore.membership(e, kcoreK, kcoreRounds)
-            .select(col("node"), col("d").as("core_degree"))
-            .withColumn("as_of", lit(asOf))
-        }
+      case _ => Rounds.held(KCore.membership(e, kcoreK, kcoreRounds))
     }
-    stageSwap(spark, s"${table}_kcore", b, "node")(core)
+    stageSwap(spark, s"${table}_kcore", b, "node")(
+      core.df.select(col("node"), col("d").as("core_degree"))
+        .withColumn("as_of", lit(asOf)))
     // the creation-k declaration: a later refresh at a different k
     // must never patch against an incompatible membership (it refuses
     // into the full-peel branch above instead)
     spark.sql(s"ALTER TABLE ${table}_kcore SET TBLPROPERTIES(" +
       s"'graft.kcore.k'='$kcoreK')")
-    release(spark.sparkContext, coreBlocks)
+    core.release()
 
-    release(spark.sparkContext, eBlocks)
+    ePin.release()
     // physical compaction rides the tick only when asked (default
     // preserves the original contract); retirement is gated on the
     // tombstone snapshot taken BEFORE the summaries — a pop landing
@@ -493,7 +484,7 @@ object GraphStore {
           spark.table(s"${table}_dels").inputFiles.toSet
         else Set.empty[String]
       if (delsNow == snap && delsNow.nonEmpty)
-        graft.Probes.dropManaged(spark, s"${table}_dels")
+        TableSwap.dropManaged(spark, s"${table}_dels")
     }
   }
 

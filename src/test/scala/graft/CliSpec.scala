@@ -3,6 +3,8 @@ package graft
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
+import graft.sources.TableSwap
+
 /** End-to-end CLI spec: init → ingest (statements + fpx) → stats →
   * query → optimize, mirroring the reference writer's double insert
   * (store.py:54-60) and engine.optimize's full flag.
@@ -153,7 +155,7 @@ class CliSpec extends AnyFunSuite {
     import org.apache.spark.sql.SaveMode
     val names = Seq("mig_vecs", "mig_vecs_cents", "mig_vecs_pq",
       "mig_vecs_codes", "mig_vecs_dels")
-    names.foreach(n => Probes.dropManaged(spark, n))
+    names.foreach(n => TableSwap.dropManaged(spark, n))
     val emb = Tables.load(spark, SparkTestSession.sf, "embeddings")
     graft.sources.VecStore.init(spark, "mig_vecs", emb,
       col("label"), buckets = 4)
@@ -168,7 +170,7 @@ class CliSpec extends AnyFunSuite {
           (col("list_id") + lit(1)) % lit(nLists.toInt))
           .otherwise(col("list_id")))
       .localCheckpoint()
-    Probes.dropManaged(spark, "mig_vecs")
+    TableSwap.dropManaged(spark, "mig_vecs")
     perturbed.write.mode(SaveMode.Overwrite).format("parquet")
       .partitionBy("list_id").bucketBy(4, "vec_id").sortBy("vec_id")
       .saveAsTable("mig_vecs")
@@ -176,12 +178,12 @@ class CliSpec extends AnyFunSuite {
     // pre-stamp-scheme on-disk shape
     val legacyCb = spark.table("mig_vecs_pq").drop("cb_hash")
       .localCheckpoint()
-    Probes.dropManaged(spark, "mig_vecs_pq")
+    TableSwap.dropManaged(spark, "mig_vecs_pq")
     legacyCb.write.mode(SaveMode.Overwrite).format("parquet")
       .saveAsTable("mig_vecs_pq")
     val legacyCodes = spark.table("mig_vecs_codes").drop("cb_hash")
       .localCheckpoint()
-    Probes.dropManaged(spark, "mig_vecs_codes")
+    TableSwap.dropManaged(spark, "mig_vecs_codes")
     legacyCodes.write.mode(SaveMode.Overwrite).format("parquet")
       .saveAsTable("mig_vecs_codes")
     // the legacy store REFUSES PQ serving (the r11 guard) — migrate is
@@ -230,7 +232,7 @@ class CliSpec extends AnyFunSuite {
   test("cli treeify/untreeify: in-place tree mode round-trip") {
     val names = Seq("tfy_vecs", "tfy_vecs_cents", "tfy_vecs_tops",
       "tfy_vecs_leafmap")
-    names.foreach(n => Probes.dropManaged(spark, n))
+    names.foreach(n => TableSwap.dropManaged(spark, n))
     val emb = Tables.load(spark, SparkTestSession.sf, "embeddings")
     graft.sources.VecStore.init(spark, "tfy_vecs", emb,
       col("label"), buckets = 4)

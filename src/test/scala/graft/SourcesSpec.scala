@@ -7,7 +7,7 @@ import org.scalatest.funsuite.AnyFunSuite
 
 import graft.model.Statements
 import graft.operators.{Fpx, Xref}
-import graft.sources.{FpxStore, FtmJson, StatementStore, XrefStore}
+import graft.sources.{FpxStore, FtmJson, StatementStore, TableSwap, XrefStore}
 
 /** Specs for the storage layer: bucketed statement store with FINAL
   * semantics (shuffle-free by construction) and FTM JSONL ingest.
@@ -21,7 +21,7 @@ class SourcesSpec extends AnyFunSuite {
     * forgets tables between JVMs but their warehouse dirs persist.
     */
   private def dropTable(name: String): Unit =
-    Probes.dropManaged(spark, name)
+    TableSwap.dropManaged(spark, name)
 
   private def sampleStatements = {
     import spark.implicits._

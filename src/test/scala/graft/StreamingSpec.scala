@@ -6,7 +6,7 @@ import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import org.apache.spark.sql.streaming.Trigger
 import org.scalatest.funsuite.AnyFunSuite
 
-import graft.sources.XrefStore
+import graft.sources.{TableSwap, XrefStore}
 import graft.streaming.Streams
 
 /** Structured-Streaming specs (SURVEY.md §2 st-block) driven through
@@ -270,7 +270,7 @@ class StreamingSpec extends AnyFunSuite {
     import spark.implicits._
     implicit val sq = spark.sqlContext
     for (t <- Seq("st15_xref", "st15_xref_reverse", "st15_xref_mapping"))
-      Probes.dropManaged(spark, t)
+      TableSwap.dropManaged(spark, t)
     def pair(l: String, r: String, j: String, t: Int) =
       ("ds", l, "P", "de", l.toUpperCase, "ds", r, "P", "de",
         r.toUpperCase, j, 0.9, ts(t), "u")
@@ -522,7 +522,7 @@ class StreamingSpec extends AnyFunSuite {
     import spark.implicits._
     implicit val sq = spark.sqlContext
     for (t <- Seq("st13b_docs", "st13b_docs_bands"))
-      Probes.dropManaged(spark, t)
+      TableSwap.dropManaged(spark, t)
     val textA = "the quick brown fox jumps over the lazy dog again today"
     val textB = "completely different content with no shared phrases here"
     val in = MemoryStream[(Long, String, String)]
@@ -654,7 +654,7 @@ class StreamingSpec extends AnyFunSuite {
     import spark.implicits._
     implicit val sq = spark.sqlContext
     for (t <- Seq("st13c_docs", "st13c_docs_bands"))
-      Probes.dropManaged(spark, t)
+      TableSwap.dropManaged(spark, t)
     val textA = "the quick brown fox jumps over the lazy dog again today"
     val textB = "completely different content with no shared phrases here"
     val in = MemoryStream[(Long, String, String)]
@@ -728,7 +728,7 @@ class StreamingSpec extends AnyFunSuite {
     implicit val sq = spark.sqlContext
     for (t <- Seq("st14c_vecs", "st14c_vecs_cents", "st14c_vecs_pq",
         "st14c_vecs_codes"))
-      Probes.dropManaged(spark, t)
+      TableSwap.dropManaged(spark, t)
     val emb = Tables.load(spark, sf, "embeddings")
     val storedSide = emb.filter(col("vec_id") % 10 =!= 0)
     val batchSide = emb.filter(col("vec_id") % 10 === 0)
@@ -804,7 +804,7 @@ class StreamingSpec extends AnyFunSuite {
     import org.apache.spark.sql.functions.{col, lit}
     implicit val sq = spark.sqlContext
     for (t <- Seq("st14_vecs", "st14_vecs_cents"))
-      Probes.dropManaged(spark, t)
+      TableSwap.dropManaged(spark, t)
     val emb = Tables.load(spark, sf, "embeddings")
     val storedSide = emb.filter(col("vec_id") % 10 =!= 0)
     val batchSide = emb.filter(col("vec_id") % 10 === 0)
@@ -858,7 +858,7 @@ class StreamingSpec extends AnyFunSuite {
     implicit val sq = spark.sqlContext
     for (t <- Seq("st14t_vecs", "st14t_vecs_cents", "st14t_vecs_tops",
         "st14t_vecs_leafmap"))
-      Probes.dropManaged(spark, t)
+      TableSwap.dropManaged(spark, t)
     val emb = Tables.load(spark, sf, "embeddings")
     val storedSide = emb.filter(col("vec_id") % 10 =!= 0)
     val batchSide = emb.filter(col("vec_id") % 10 === 0)
@@ -912,7 +912,7 @@ class StreamingSpec extends AnyFunSuite {
     import spark.implicits._
     implicit val sq = spark.sqlContext
     for (t <- Seq("st16_docs", "st16_docs_bands", "st16_docs_dels"))
-      Probes.dropManaged(spark, t)
+      TableSwap.dropManaged(spark, t)
     val textA = "the quick brown fox jumps over the lazy dog again today"
     val textB = "completely different content with no shared phrases here"
     val textC = "a third unrelated document about entirely other things"
@@ -1003,7 +1003,7 @@ class StreamingSpec extends AnyFunSuite {
     for (t <- Seq("st16b_sk", "st16b_sk_dels", "st16b_xref",
         "st16b_xref_reverse", "st16b_xref_mapping", "st16b_xref_dsdels",
         "st16b_tk", "st16b_tk_dels"))
-      Probes.dropManaged(spark, t)
+      TableSwap.dropManaged(spark, t)
     val k = 64
     graft.sources.SketchStore.applyBatch(spark, Seq(
       (1L, "alpha beta gamma delta epsilon zeta", "keep"),
@@ -1100,7 +1100,7 @@ class StreamingSpec extends AnyFunSuite {
     implicit val sq = spark.sqlContext
     for (t <- Seq("st16_vecs", "st16_vecs_cents", "st16_vecs_pq",
         "st16_vecs_codes", "st16_vecs_dels"))
-      Probes.dropManaged(spark, t)
+      TableSwap.dropManaged(spark, t)
     val emb = Tables.load(spark, sf, "embeddings")
     graft.sources.VecStore.init(spark, "st16_vecs", emb,
       col("label"), buckets = 4)
@@ -1162,7 +1162,7 @@ class StreamingSpec extends AnyFunSuite {
     implicit val sq = spark.sqlContext
     for (t <- Seq("st14b_vecs", "st14b_vecs_cents", "st14b_vecs_pq",
         "st14b_vecs_codes", "st14b_vecs_dels"))
-      Probes.dropManaged(spark, t)
+      TableSwap.dropManaged(spark, t)
     val emb = Tables.load(spark, sf, "embeddings")
     val storedSide = emb.filter(col("vec_id") % 10 =!= 0)
     graft.sources.VecStore.init(spark, "st14b_vecs", storedSide,
@@ -1380,7 +1380,7 @@ class StreamingSpec extends AnyFunSuite {
     implicit val sq = spark.sqlContext
     val table = "st18_sketch"
     spark.sql(s"DROP TABLE IF EXISTS $table")
-    graft.Probes.dropManaged(spark, table)
+    TableSwap.dropManaged(spark, table)
     val k = 1024
     // deterministic doc maker: source s contributes distinct shingles
     val seen = scala.collection.mutable.ArrayBuffer.empty[(Long, String, String)]
@@ -1443,7 +1443,7 @@ class StreamingSpec extends AnyFunSuite {
     // treat compact as a no-op, not NPE on the null max(ver)
     val empty = "st18_empty_sketch"
     spark.sql(s"DROP TABLE IF EXISTS $empty")
-    graft.Probes.dropManaged(spark, empty)
+    TableSwap.dropManaged(spark, empty)
     graft.sources.SketchStore.applyBatch(spark,
       Seq.empty[(Long, String, String)].toDF("doc_id", "text", "source"),
       empty, k, batchId = 0L)
@@ -1606,8 +1606,8 @@ class StreamingSpec extends AnyFunSuite {
     val table = "st20_topk"
     spark.sql(s"DROP TABLE IF EXISTS $table")
     spark.sql(s"DROP TABLE IF EXISTS ${table}_dels")
-    graft.Probes.dropManaged(spark, table)
-    graft.Probes.dropManaged(spark, s"${table}_dels")
+    TableSwap.dropManaged(spark, table)
+    TableSwap.dropManaged(spark, s"${table}_dels")
     val cap = 64 // far above the test vocabulary → exact regime
     val seen = scala.collection.mutable.ArrayBuffer.empty[(Long, String, String)]
     def doc(id: Long, s: String, text: String): (Long, String, String) = {
@@ -1681,8 +1681,8 @@ class StreamingSpec extends AnyFunSuite {
     val table = "st23_bm"
     spark.sql(s"DROP TABLE IF EXISTS $table")
     spark.sql(s"DROP TABLE IF EXISTS ${table}_dels")
-    graft.Probes.dropManaged(spark, table)
-    graft.Probes.dropManaged(spark, s"${table}_dels")
+    TableSwap.dropManaged(spark, table)
+    TableSwap.dropManaged(spark, s"${table}_dels")
     val seen = scala.collection.mutable.ArrayBuffer.empty[(String, Long)]
     def e(t: String, u: Long): (String, Long) = { seen += ((t, u)); (t, u) }
     val popped = scala.collection.mutable.Set.empty[Long]
@@ -1742,8 +1742,8 @@ class StreamingSpec extends AnyFunSuite {
     val table = "st22_kll"
     spark.sql(s"DROP TABLE IF EXISTS $table")
     spark.sql(s"DROP TABLE IF EXISTS ${table}_dels")
-    graft.Probes.dropManaged(spark, table)
-    graft.Probes.dropManaged(spark, s"${table}_dels")
+    TableSwap.dropManaged(spark, table)
+    TableSwap.dropManaged(spark, s"${table}_dels")
     val k = 64 // far above the test doc counts → exact regime
     val seen = scala.collection.mutable.ArrayBuffer.empty[(Long, String, String)]
     def doc(id: Long, s: String, text: String): (Long, String, String) = {
@@ -1826,7 +1826,7 @@ class StreamingSpec extends AnyFunSuite {
     Seq(table, s"${table}_dels", s"${table}_ranks",
       s"${table}_communities", s"${table}_cohesion", s"${table}_kcore",
       s"${table}_support")
-      .foreach(graft.Probes.dropManaged(spark, _))
+      .foreach(TableSwap.dropManaged(spark, _))
     def served(): Map[String, Long] =
       GraphStore.ranks(spark, table).collect()
         .map(r => r.getString(0) -> r.getLong(1)).toMap
